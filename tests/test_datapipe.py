@@ -932,6 +932,53 @@ def test_band_index_store_schema_meta_and_legacy_fallback(spark, tmp_path):
     assert {(r[0], r[1]) for r in legacy.read().collect()} == expect
 
 
+def test_band_index_empty_seed_then_ingest_sees_no_own_rows(spark, tmp_path):
+    """An empty seed batch leaves a version directory with no parquet
+    files. Its snapshot is an empty frame with the persisted index
+    schema, and the next ingest's lazy pairs read the index as it was
+    BEFORE that ingest's append: the batch yields its in-batch pairs
+    only — never cross pairs against its own appended rows."""
+    import glob
+    import os
+
+    from transferia_spark.operators.dedup import BandIndexStore
+
+    rows = [(i, f"the quick brown fox variant {i % 3} here") for i in range(12)]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    t = build(
+        "dedup_incremental", text_col="text", id_col="doc_id", n=3, k=16, bands=4
+    )
+    store = BandIndexStore(spark, str(tmp_path / "idx"), n_shards=4)
+    assert store.ingest(t, df.filter("false")).count() == 0  # empty seed
+    assert store.exists()
+    assert not glob.glob(os.path.join(store._vdir(), "_shard=*", "*.parquet"))
+    empty = store.read()  # the empty snapshot carries the index schema
+    assert [f.name for f in empty.schema.fields] == ["doc_id", "_bk"]
+    assert empty.count() == 0
+
+    pairs = store.ingest(t, df)  # lazy: evaluated after the append
+    got = pairs.collect()
+    want = {
+        (r.id_a, r.id_b)
+        for r in build(
+            "dedup_minhash_lsh", text_col="text", id_col="doc_id", n=3,
+            k=16, bands=4,
+        ).apply_df(df).collect()
+    }
+    assert got and not any(r.is_cross for r in got)
+    assert {(r.id_a, r.id_b) for r in got} == want
+
+    # a seed append that died after _meta.json landed leaves no version
+    # directory at all: the snapshot is still the empty index, not a
+    # read of a missing path
+    crashed = BandIndexStore(spark, str(tmp_path / "idx2"), n_shards=4)
+    crashed._ensure_shards(t.band_index(df))  # meta + schema, no write
+    assert not crashed.exists()
+    empty = crashed.read()
+    assert [f.name for f in empty.schema.fields] == ["doc_id", "_bk"]
+    assert empty.count() == 0
+
+
 def test_band_index_ingest_sink_streaming(spark, tmp_path):
     """STREAMING near-dup ingest: documents arrive as a rate-limited
     file stream, each micro-batch checks against and extends the

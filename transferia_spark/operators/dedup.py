@@ -673,6 +673,20 @@ class BandIndexStore:
         if self._load_meta() is None:
             self._save_meta(band_rows.schema)
 
+    def _index_schema(self):
+        """The persisted data schema plus the ``_shard`` partition
+        column, or None for a store written before ``_meta.json`` held
+        the schema."""
+        meta = self._load_meta() or {}
+        if "schema" not in meta:
+            return None
+        from pyspark.sql import types as T
+
+        data = T.StructType.fromJson(meta["schema"])
+        return T.StructType(
+            list(data.fields) + [T.StructField("_shard", T.LongType())]
+        )
+
     def _index_reader(self):
         """``spark.read`` with the persisted data schema when known —
         an explicit schema skips the per-open parquet footer inference
@@ -680,16 +694,8 @@ class BandIndexStore:
         the 100 TB ingest cadence that is a job per batch for a schema
         that never changes). Stores written before the schema was
         persisted in ``_meta.json`` fall back to inference."""
-        meta = self._load_meta() or {}
-        if "schema" not in meta:
-            return self.spark.read
-        from pyspark.sql import types as T
-
-        data = T.StructType.fromJson(meta["schema"])
-        full = T.StructType(
-            list(data.fields) + [T.StructField("_shard", T.LongType())]
-        )
-        return self.spark.read.schema(full)
+        full = self._index_schema()
+        return self.spark.read if full is None else self.spark.read.schema(full)
 
     # -- versioned layout ----------------------------------------------
     def _version(self) -> int:
@@ -747,8 +753,15 @@ class BandIndexStore:
             _glob.glob(os.path.join(self._vdir(), "_shard=*", "*.parquet"))
         )
         if not paths:
-            # empty/missing version dir: same failure mode as before
-            # (the directory read raises on a missing path)
+            full = self._index_schema()
+            if full is not None:
+                # empty version (an empty seed batch, or a seed append
+                # that died after _meta.json landed and left no
+                # directory): the empty index, not a directory read
+                # that fails on a missing path
+                return self.spark.createDataFrame([], full)
+            # legacy store with no persisted schema: the directory read
+            # raises on a missing path, as before
             return self._index_reader().parquet(self._vdir())
         return (
             self._index_reader()

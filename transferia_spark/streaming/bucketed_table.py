@@ -71,6 +71,10 @@ from pyspark.sql import types as T
 
 from transferia_spark.cdc.merge import merge_batch
 
+#: target bytes per delta file an ``append_delta`` writes (Spark's own
+#: ``spark.sql.files.maxPartitionBytes`` default)
+DELTA_FILE_BYTES = 128 << 20
+
 BUCKET_COL = "bkt"  # no leading underscore: `_…=3` dirs are invisible
 # to Spark's file discovery (treated as metadata)
 
@@ -1095,6 +1099,7 @@ class BucketedParquetTable:
         self-contained."""
         from transferia_spark.cdc.changeitem import META_COLS
         from transferia_spark.cdc.collapse import normalize_pk_changes
+        from transferia_spark.operators.corpus import derive_n_shards
         from pyspark.sql import types as T
 
         doc = self._manifest_doc()
@@ -1132,29 +1137,33 @@ class BucketedParquetTable:
         # delta's EXACT touched-bucket set (read driver-side from the
         # written file's bucket column — a one-column scan of a local
         # file, no Spark job).
-        parts = out.rdd.getNumPartitions()
+        # the file count follows the batch's plan-size statistics
+        # (~DELTA_FILE_BYTES a file, at most one per bucket), never its
+        # partition count: that follows defaultParallelism, so the
+        # on-disk layout would depend on the host's core count. A batch
+        # with no size statistics (a Python-datasource micro-batch)
+        # writes one file: the range exchange SAMPLES its child, which
+        # on such a batch re-runs the whole source decode
+        n_files = min(
+            derive_n_shards(out, target_bytes=DELTA_FILE_BYTES, fallback=1),
+            self.n_buckets,
+        )
         cached = None
-        if parts > 4:
-            # wide backlog: contiguous bucket ranges per file so file
-            # and row-group stats both prune. The range exchange SAMPLES
-            # its child to place boundaries — on a Python-datasource
-            # micro-batch that re-ran the whole source decode every
-            # append (two decode passes per batch, profiled r14);
-            # persisting the pre-exchange frame makes the sampler's pass
-            # double as the materialization and the exchange read cached
-            # blocks (disk-backed level, so a bulk catch-up batch spills
-            # instead of pressuring executor memory)
+        if n_files > 1:
+            # contiguous bucket ranges per file so file and row-group
+            # stats both prune; persisting the pre-exchange frame makes
+            # the sampler's pass double as the materialization
+            # (disk-backed level, so a bulk batch spills instead of
+            # pressuring executor memory)
             from pyspark import StorageLevel
 
             cached = out = out.persist(StorageLevel.MEMORY_AND_DISK)
-            out = out.repartitionByRange(
-                min(self.n_buckets, parts), F.col(BUCKET_COL)
-            )
-        # else: keep the batch's natural 1-4 partitions — 1-4 files per
-        # append (vs one per touched bucket before), and a bulk
-        # catch-up batch keeps its natural write parallelism (a
-        # coalesce(1) here serialized the whole backlog sort+encode
-        # through one task)
+            out = out.repartitionByRange(n_files, F.col(BUCKET_COL))
+        elif out.rdd.getNumPartitions() > 1:
+            # one file through a single-partition exchange: the upstream
+            # decode keeps its parallelism (a coalesce(1) would pull it
+            # into the one write task)
+            out = out.repartition(1)
         out = out.sortWithinPartitions(
             F.col(BUCKET_COL), *[F.col(k) for k in self.keys]
         )
